@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incrementally-maintained IVF index — the production twin of the
   * fingerprint-cached [[Similarity.ivfIndex]] for a corpus that GROWS
@@ -70,8 +71,12 @@ import org.apache.spark.sql.functions._
   * scan prunes every data generation to the `nprobe` probed cells
   * (PartitionFilters), and the latest-generation-wins dedup (a true
   * UPSERT: a re-sent vec_id shadows its older row) is a window over
-  * probed-cell rows only. The fixed term grows with generations (one
-  * directory listing each) — compact by rebuilding when deltas
+  * probed-cell rows only. The fixed term grows with generations: one
+  * driver-side `listStatus` per generation dir ([[PrunedRead]] — no
+  * Spark job; a generation without a probed cell is not read), plus
+  * one footer-inference job per `data-N` generation read (its payload
+  * types are the caller's; every other part's schema is pinned) and
+  * the one probe-cell collect — compact by rebuilding when deltas
   * accumulate, exactly like any LSM-shaped store. */
 object AnnIndex {
 
@@ -96,6 +101,29 @@ object AnnIndex {
   private val PqTrainN = 64
 
   private def pqSubs(colName: String): String = Similarity.pqSubsExpr(colName)
+
+  // Pinned read schemas of the fixed-shape parts, by dir-name prefix: a
+  // read without one starts a footer-inference job per dir, before any
+  // probe prunes a row. `cell` is INT, as partition-value inference
+  // types it whatever type was written (readers cast to LONG).
+  // `data-N` stays inferred: its label and embedding types are
+  // the caller's. Quantizers are stored float32 (seeds and codebook
+  // centroids are cast at write, a no-op for float32 embeddings), like
+  // the running-stats centroids and the retrained seeds.
+  private val PinnedSchemas = Seq(
+    "stats-" -> "cell BIGINT, pos INT, sm DOUBLE, cnt BIGINT",
+    "seeds" -> "cell BIGINT, se ARRAY<FLOAT>, sn DOUBLE",
+    "codebooks" -> "mm INT, code BIGINT, ce ARRAY<FLOAT>, cn DOUBLE",
+    "codes-" -> "vec_id BIGINT, codes ARRAY<INT>, gen BIGINT, cell INT",
+    "tombs-" -> "vec_id BIGINT, gen BIGINT, cell INT")
+    .map { case (prefix, ddl) => prefix -> StructType.fromDDL(ddl) }
+
+  private def schemaOf(dir: String): Option[StructType] =
+    PinnedSchemas.collectFirst { case (prefix, sc) if dir.startsWith(prefix) => sc }
+
+  /** Whole-dir read of a root-level part, pinned where its shape is. */
+  private def readPart(s: SparkSession, root: String, dir: String): DataFrame =
+    schemaOf(dir).fold(s.read)(s.read.schema).parquet(s"$root/$dir")
 
   // Manifest lines after the leading generation number, by prefix:
   // `data-N` / `tombs-N` dirs (ordered), `dim:<n>` (embedding
@@ -268,7 +296,8 @@ object AnnIndex {
     init.select(col("mm"), col("code"), col("ce").as("ice"))
       .join(assignedSample.withColumnsRenamed(Map("m" -> "mm")),
         Seq("mm", "code"), "left")
-      .select(col("mm"), col("code"), coalesce(col("ce"), col("ice")).as("ce"))
+      .select(col("mm"), col("code"),
+        coalesce(col("ce"), col("ice")).cast("array<float>").as("ce"))
       .withColumn("cn", expr(dot("ce", "ce")))
   }
 
@@ -313,17 +342,17 @@ object AnnIndex {
       s"embedding dim $dim != ${PqM * PqSubDim} (the index's PQ geometry is " +
         s"$PqM subspaces x $PqSubDim dims; adjust Similarity.PqM/PqSubDim for other widths)")
     val seeds = v.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cell"), col("embedding").as("se"))
+      .select(col("vec_id").as("cell"), col("embedding").cast("array<float>").as("se"))
       .withColumn("sn", expr(dot("se", "se")))
     seeds.write.mode("overwrite").parquet(s"$root/seeds")
     trainCodebooks(v).write.mode("overwrite").parquet(s"$root/codebooks")
-    val storedSeeds = s.read.parquet(s"$root/seeds")
+    val storedSeeds = readPart(s, root, "seeds")
     val a = assign(v, storedSeeds)
       .withColumn("gen", lit(0L))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       a.write.mode("overwrite").partitionBy("cell").parquet(s"$root/data-0")
-      encode(a, s.read.parquet(s"$root/codebooks"))
+      encode(a, readPart(s, root, "codebooks"))
         .withColumn("gen", lit(0L))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$root/codes-0")
       statsOf(a).write.mode("overwrite").parquet(s"$root/stats-0")
@@ -355,66 +384,79 @@ object AnnIndex {
     *
     * `batchTag` (streaming ingest) rides the atomic manifest move as
     * a `batch:<tag>` line — the idempotence ledger
-    * [[graft.streaming.StreamingAnnIngest]] consults on replay. */
+    * [[graft.streaming.StreamingAnnIngest]] consults on replay. An
+    * empty batch publishes nothing (tag included) and returns an
+    * empty accounting frame. */
   def upsert(batch: DataFrame, root: String,
       batchTag: Option[String] = None): DataFrame = {
     val s = batch.sparkSession
     org.apache.spark.sql.graft.GraftFunctions.register(s)
+    import s.implicits._
     PublishLock.withLock(s, root) {
     val (gen, lines) = readManifest(s, root).getOrElse(
       throw new IllegalStateException(s"no ANN index published at $root — build() first"))
     val newGen = gen + 1
-    val seeds = s.read.parquet(s"$root/${seedsDirOf(lines)}")
+    val seeds = readPart(s, root, seedsDirOf(lines))
     val b = assign(withNorm(batch.select(col("vec_id").cast("long").as("vec_id"),
         col("label"), col("embedding"))), seeds)
       .withColumn("gen", lit(newGen))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       b.write.mode("overwrite").partitionBy("cell").parquet(s"$root/data-$newGen")
-      // encode the batch against the FROZEN current codebooks (the
-      // founding ones, or the latest retrain's) — the ADC side of the
-      // index stays append-only between retrains
-      encode(b, s.read.parquet(s"$root/${booksDirOf(lines)}"))
-        .withColumn("gen", lit(newGen))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$root/codes-$newGen")
-      // moved-cell guard: tombstone the old cell of every re-sent id
-      // that changed cells (narrow projection scan, see scaladoc)
-      val movedTombs = liveIn(s, root, dataDirsOf(lines), tombDirsOf(lines),
-          None, Seq.empty)
-        .select(col("vec_id"), col("cell").as("old_cell"))
-        .join(broadcast(b.select(col("vec_id"), col("cell").as("new_cell"))), "vec_id")
-        .filter(col("old_cell") =!= col("new_cell"))
-        .select(col("vec_id"), col("old_cell").as("cell"))
-        .withColumn("gen", lit(newGen))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val tombLines = try {
-        if (movedTombs.isEmpty) Seq.empty[String]
-        else {
-          movedTombs.write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$root/tombs-$newGen")
-          Seq(s"tombs-$newGen")
-        }
-      } finally movedTombs.unpersist()
-      val old = s.read.parquet(s"$root/stats-$gen")
-      statsOf(b).unionByName(old)
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("sm")).as("sm"), sum(col("cnt")).as("cnt"))
-        .write.mode("overwrite").parquet(s"$root/stats-$newGen")
-      writeManifest(s, root, newGen,
-        lines ++ Seq(s"data-$newGen") ++ tombLines ++ batchTag.map(t => s"batch:$t"))
-      // accounting from the dim-0 stats rows (one per cell): vector
-      // counts before/added/after — collected AFTER publish so the
-      // numbers describe the live index
-      val before = old.filter(col("pos") === 0)
-        .select(col("cell"), col("cnt").as("n_before"))
-      val added = s.read.parquet(s"$root/stats-$newGen").filter(col("pos") === 0)
-        .select(col("cell"), col("cnt").as("n_after"))
-      added.join(before, Seq("cell"), "left")
-        .select(col("cell"),
-          coalesce(col("n_before"), lit(0L)).as("n_before"),
-          (col("n_after") - coalesce(col("n_before"), lit(0L))).as("n_added"),
-          col("n_after"))
-        .orderBy(col("cell"))
+      val dataDir = new org.apache.hadoop.fs.Path(root, s"data-$newGen")
+      // an empty batch writes no cell partition and publishes nothing
+      // (the [[delete]] no-op rule): a generation without a file has no
+      // schema to read back; the unreferenced dir is the next upsert's
+      // to overwrite, or the sweep's
+      if (!dataDir.getFileSystem(s.sparkContext.hadoopConfiguration)
+          .listStatus(dataDir).exists(_.isDirectory))
+        Seq.empty[(Long, Long, Long, Long)].toDF("cell", "n_before", "n_added", "n_after")
+      else {
+        // encode the batch against the FROZEN current codebooks (the
+        // founding ones, or the latest retrain's) — the ADC side of the
+        // index stays append-only between retrains
+        encode(b, readPart(s, root, booksDirOf(lines)))
+          .withColumn("gen", lit(newGen))
+          .write.mode("overwrite").partitionBy("cell").parquet(s"$root/codes-$newGen")
+        // moved-cell guard: tombstone the old cell of every re-sent id
+        // that changed cells (narrow projection scan, see scaladoc)
+        val movedTombs = liveIn(s, root, dataDirsOf(lines), tombDirsOf(lines),
+            None, Seq.empty)
+          .select(col("vec_id"), col("cell").as("old_cell"))
+          .join(broadcast(b.select(col("vec_id"), col("cell").as("new_cell"))), "vec_id")
+          .filter(col("old_cell") =!= col("new_cell"))
+          .select(col("vec_id"), col("old_cell").as("cell"))
+          .withColumn("gen", lit(newGen))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val tombLines = try {
+          if (movedTombs.isEmpty) Seq.empty[String]
+          else {
+            movedTombs.write.mode("overwrite").partitionBy("cell")
+              .parquet(s"$root/tombs-$newGen")
+            Seq(s"tombs-$newGen")
+          }
+        } finally movedTombs.unpersist()
+        val old = readPart(s, root, s"stats-$gen")
+        statsOf(b).unionByName(old)
+          .groupBy(col("cell"), col("pos"))
+          .agg(sum(col("sm")).as("sm"), sum(col("cnt")).as("cnt"))
+          .write.mode("overwrite").parquet(s"$root/stats-$newGen")
+        writeManifest(s, root, newGen,
+          lines ++ Seq(s"data-$newGen") ++ tombLines ++ batchTag.map(t => s"batch:$t"))
+        // accounting from the dim-0 stats rows (one per cell): vector
+        // counts before/added/after — collected AFTER publish so the
+        // numbers describe the live index
+        val before = old.filter(col("pos") === 0)
+          .select(col("cell"), col("cnt").as("n_before"))
+        val added = readPart(s, root, s"stats-$newGen").filter(col("pos") === 0)
+          .select(col("cell"), col("cnt").as("n_after"))
+        added.join(before, Seq("cell"), "left")
+          .select(col("cell"),
+            coalesce(col("n_before"), lit(0L)).as("n_before"),
+            (col("n_after") - coalesce(col("n_before"), lit(0L))).as("n_added"),
+            col("n_after"))
+          .orderBy(col("cell"))
+      }
     } finally b.unpersist()
     }
   }
@@ -433,32 +475,35 @@ object AnnIndex {
 
   /** Latest-event-wins resolution over generation dirs plus
     * tombstones, optionally restricted to `cells` (the probed-cell
-    * prune — pushed through the union into every generation's
-    * PartitionFilters). Data rows and tombstones form ONE event
-    * stream per vec_id ordered by generation: the newest event wins,
-    * and a winning tombstone removes the id (a later re-upsert
-    * revives it). `payload` names the value columns of `dirs`' rows;
-    * tombstones contribute nulls there and never survive the
-    * filter. */
+    * prune: [[PrunedRead]] lists each generation dir once on the
+    * driver and reads only the probed cells' partitions that exist,
+    * so the `cell IN (…)` lands in every generation's
+    * PartitionFilters and a generation without them is not read).
+    * Data rows and tombstones form ONE event stream per vec_id
+    * ordered by generation: the newest event wins, and a winning
+    * tombstone removes the id (a later re-upsert revives it).
+    * `payload` names the value columns of `dirs`' rows; tombstones
+    * contribute nulls there and never survive the filter. */
   private def liveIn(s: SparkSession, root: String, dirs: Seq[String],
       tombDirs: Seq[String], cells: Option[Array[Long]],
       payload: Seq[String]): DataFrame = {
-    val rows = dirs.map(d => s.read.parquet(s"$root/$d")
-        .select(col("vec_id") +: col("gen") +: col("cell") +:
-          lit(false).as("is_tomb") +: payload.map(col): _*))
-      .reduce(_ unionByName _)
-    val events = tombDirs
-      .map(d => s.read.parquet(s"$root/$d")
-        .select(col("vec_id"), col("gen"), col("cell"), lit(true).as("is_tomb")))
-      .foldLeft(rows)((acc, t) => acc.unionByName(t, allowMissingColumns = true))
+    def read(ds: Seq[String]): DataFrame = cells match {
+      case Some(cs) =>
+        PrunedRead(s, ds.map(d => s"$root/$d"), "cell", cs.toSeq, schemaOf(ds.head))
+      case None => ds.map(d => readPart(s, root, d)).reduce(_ unionByName _)
+    }
+    val rows = read(dirs)
+      .select(col("vec_id") +: col("gen") +: col("cell") +:
+        lit(false).as("is_tomb") +: payload.map(col): _*)
+    val events =
+      if (tombDirs.isEmpty) rows
+      else rows.unionByName(read(tombDirs)
+          .select(col("vec_id"), col("gen"), col("cell"), lit(true).as("is_tomb")),
+        allowMissingColumns = true)
     // partition-column discovery types `cell` as INT when re-reading a
     // dir written partitionBy("cell") — normalize so every consumer
     // (stats rebuild, accounting, getLong collects) sees LONG
     val typed = events.withColumn("cell", col("cell").cast("long"))
-    val pruned = cells match {
-      case Some(cs) => typed.filter(col("cell").isin(cs.map(Long.box): _*))
-      case None => typed
-    }
     // gen desc, data before tombstone on the tie: a moved re-upsert
     // writes its new-cell row and its old-cell tombstone in the SAME
     // generation — globally the data row must win (the id is alive in
@@ -466,7 +511,7 @@ object AnnIndex {
     // the tombstone and correctly hides the stale row
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("gen").desc, col("is_tomb").asc)
-    pruned
+    typed
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && !col("is_tomb"))
       .drop("rn", "is_tomb")
@@ -482,11 +527,11 @@ object AnnIndex {
   def snapshotDiff(s: SparkSession, root: String, v1: Long, v2: Long): DataFrame = {
     def state(v: Long): DataFrame = {
       val (_, lines) = readManifestAsOf(s, root, v)
-      val rows = dataDirsOf(lines).map(d => s.read.parquet(s"$root/$d")
+      val rows = dataDirsOf(lines).map(d => readPart(s, root, d)
           .select(col("vec_id"), col("gen"), lit(false).as("is_tomb")))
         .reduce(_ unionByName _)
       val events = tombDirsOf(lines)
-        .map(d => s.read.parquet(s"$root/$d")
+        .map(d => readPart(s, root, d)
           .select(col("vec_id"), col("gen"), lit(true).as("is_tomb")))
         .foldLeft(rows)(_ unionByName _)
       val w = org.apache.spark.sql.expressions.Window
@@ -532,7 +577,7 @@ object AnnIndex {
     * the batch probe (broadcast column join) derive cell selection
     * from. */
   private def centroidsOf(s: SparkSession, root: String, gen: Long): DataFrame =
-    s.read.parquet(s"$root/stats-$gen")
+    readPart(s, root, s"stats-$gen")
       .select(col("cell"), col("pos"), (col("sm") / col("cnt")).as("m"))
       .groupBy(col("cell"))
       .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> cast(x.m as float))")
@@ -683,7 +728,7 @@ object AnnIndex {
         val probeCells = probeCellsOf(s, root, gen, lines, queryVec, nprobe)
         if (probeCells.isEmpty) emptyTopK(s)
         else {
-          val books = s.read.parquet(s"$root/${booksDirOf(lines)}")
+          val books = readPart(s, root, booksDirOf(lines))
           // query-side ADC table: M×K subspace distances, one tiny frame
           val dt = s.range(1).select(typedLit(queryVec).as("qe"))
             .select(explode(expr(pqSubs("qe"))).as("p"))
@@ -754,7 +799,7 @@ object AnnIndex {
         // probeBatch — a broadcast-join prune would full-scan)
         val probedCells = probes.select(col("cell")).distinct()
           .collect().map(_.getLong(0))
-        val books = s.read.parquet(s"$root/${booksDirOf(lines)}")
+        val books = readPart(s, root, booksDirOf(lines))
         val dt = queries
           .select(col("qid").as("dqid"), explode(expr(pqSubs("qe"))).as("p"))
           .select(col("dqid"), col("p.m").as("dm"), col("p.sv").as("qsv"))
@@ -834,7 +879,7 @@ object AnnIndex {
         // the previous generation's stats under the new gen so probes
         // keep resolving stats-<gen>. Everything lands BEFORE the
         // manifest move — the manifest is the only publish point.
-        s.read.parquet(s"$root/stats-$gen").write.mode("overwrite").parquet(s"$root/stats-$newGen")
+        readPart(s, root, s"stats-$gen").write.mode("overwrite").parquet(s"$root/stats-$newGen")
         tombs.write.mode("overwrite").partitionBy("cell").parquet(s"$root/tombs-$newGen")
         writeManifest(s, root, newGen,
           (lines :+ s"tombs-$newGen") ++ batchTag.map(t => s"batch:$t"))
@@ -878,7 +923,7 @@ object AnnIndex {
         None, Seq("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val running = s.read.parquet(s"$root/stats-$gen")
+      val running = readPart(s, root, s"stats-$gen")
         .select(col("cell"), col("pos"), col("sm").as("r_sm"), col("cnt").as("r_cnt"))
       // per (cell, pos): squared diff of the two means; live-empty cells
       // (all rows superseded/tombstoned) report shift 0.0 with their
@@ -1136,7 +1181,7 @@ object AnnIndex {
           carried ++ lines.filter(l => l.startsWith("seeds:") || l.startsWith("books:"))
             :+ s"data-$newGen")
       } else {
-        val cells = s.read.parquet(s"$root/${seedsDirOf(lines)}").count().toInt
+        val cells = readPart(s, root, seedsDirOf(lines)).count().toInt
         lloydSeeds(s, live, cells, rounds = 2)
           .write.mode("overwrite").parquet(s"$root/seeds-$newGen")
         retrainedBooks(s, live)
@@ -1145,12 +1190,12 @@ object AnnIndex {
         // discipline: what was written is what assigns)
         val a = assign(live.select(col("vec_id"), col("label"),
             col("embedding"), col("nrm")),
-            s.read.parquet(s"$root/seeds-$newGen"))
+            readPart(s, root, s"seeds-$newGen"))
           .withColumn("gen", lit(newGen))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           a.write.mode("overwrite").partitionBy("cell").parquet(s"$root/data-$newGen")
-          encode(a, s.read.parquet(s"$root/codebooks-$newGen"))
+          encode(a, readPart(s, root, s"codebooks-$newGen"))
             .withColumn("gen", lit(newGen))
             .write.mode("overwrite").partitionBy("cell").parquet(s"$root/codes-$newGen")
           statsOf(a).write.mode("overwrite").parquet(s"$root/stats-$newGen")
@@ -1164,7 +1209,7 @@ object AnnIndex {
       // post-retrain cells come from the NEW assignment
       val counted =
         if (!retrain) live.groupBy(col("cell")).agg(count(lit(1)).as("n_live"))
-        else s.read.parquet(s"$root/stats-$newGen").filter(col("pos") === 0)
+        else readPart(s, root, s"stats-$newGen").filter(col("pos") === 0)
           .select(col("cell"), col("cnt").as("n_live"))
       counted.orderBy(col("cell")).collect()
         .map(r => (r.getLong(0), r.getLong(1),

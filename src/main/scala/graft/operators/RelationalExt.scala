@@ -1740,10 +1740,14 @@ object RelationalExt {
     // window execution and one aggregation job for both
     val boundsEnv = winsorBounds(cum, envAggs)
     val exact = winsorExactFromBounds(counts, boundsEnv).drop("n_clipped")
+    // the higher neighbour is NULL when the lower one is the group's
+    // last value (n = 1); its weight is then 0, so it falls back to
+    // the lower — without it a one-row group's envelope is NULL
     val env = boundsEnv
       .select(col("flag") +: qs.map { case (_, nm) =>
         (col(s"${nm}_lo")
-          + (col(s"${nm}_hi") - col(s"${nm}_lo")) * col(s"${nm}_f")).as(nm)
+          + (coalesce(col(s"${nm}_hi"), col(s"${nm}_lo")) - col(s"${nm}_lo"))
+            * col(s"${nm}_f")).as(nm)
       }: _*)
     // approx-clipped mean from the weighted distinct values (Σ c·clip —
     // exact-decimal-identical to the per-row sum, no third raw scan)

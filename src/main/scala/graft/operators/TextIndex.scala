@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.functions.PortableHash
@@ -21,12 +22,19 @@ import graft.functions.PortableHash
   *    buckets DRIVER-side (the portable hash has an exact JVM twin, so
   *    no job runs) and scans `bucket IN (…)` — PartitionFilters prune
   *    the read to ≤|terms| of 64 partitions regardless of corpus size.
+  *    Planning is bounded the same way: [[PrunedRead]] lists each
+  *    generation's part dir once on the driver (one `listStatus`, no
+  *    Spark job) and reads only the terms' bucket dirs that exist,
+  *    with pinned schemas — a whole-dir read of > 32 bucket dirs would
+  *    start a distributed listing job per part per generation. A probe
+  *    over G generations pays 2·G driver listings and no planning job.
   *    The per-doc length `dl` is DENORMALIZED onto every posting so
   *    scoring needs no join back to a lengths table: BM25's per-term
   *    score depends only on (tf, df, dl, N, S), all of which the probe
   *    has after this one pruned scan.
   *  - `df/` — `(term, df)`, bucket-partitioned the same way (vocab-
-  *    sized; the probe reads only the query buckets and broadcasts).
+  *    sized; the probe reads only the query buckets, listed the same
+  *    way, and broadcasts).
   *  - `stats/` — one row `(n_docs, s_dl)`; broadcast into the scoring
   *    expression.
   *  - `docs/` — the per-doc registry `(doc_id, dl, d)` the MAINTENANCE
@@ -154,23 +162,36 @@ object TextIndex {
     * prune to the query terms' buckets, the corpus is never touched. */
   private[graft] def bm25ScoredIndexed(s: SparkSession, dir: String,
       terms: Seq[String], exactInt: Boolean = false): DataFrame = {
-    val root = textIndex(s, dir)
-    val buckets = terms.map(bucketOf).distinct
-    // pinned schemas: an index over an empty corpus has no part files
-    // and inference would throw; and the literal bucket type matches
-    // the partition column (INT by partition-value inference — the
-    // skill-noted partitionBy gotcha) so PartitionFilters prune
-    val post = s.read.schema(PostingsSchema).parquet(s"$root/postings")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
     val sc = if (exactInt) TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")
              else TextAnalysis.bm25ScDouble("tf", "df", "dl", "n_docs", "s_dl")
-    post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
+    joinedIndexed(s, dir, "postings", PostingsSchema, terms)
       .select(col("doc_id"), col("term").as("token"), expr(sc).as("sc"))
+  }
+
+  /** The query terms' rows of one bucket-partitioned index part
+    * (`postings`, `head` or `df`) across generation dirs: [[PrunedRead]]
+    * lists each part dir once on the driver and reads only the terms'
+    * bucket partitions with the pinned schema (an index over an empty
+    * corpus has no part files and inference would throw; the bucket
+    * type matches the partition column, INT by partition-value
+    * inference, so PartitionFilters prune); `term IN (…)` pushes to the parquet
+    * reader, whose term-sorted row groups skip the rest. */
+  private def termRows(s: SparkSession, genDirs: Seq[String], part: String,
+      schema: StructType, terms: Seq[String]): DataFrame =
+    PrunedRead(s, genDirs.map(g => s"$g/$part"), "bucket",
+        terms.map(bucketOf).distinct, Some(schema))
+      .filter(col("term").isin(terms: _*))
+
+  /** A memo-cached index's pruned `part` rows joined to their terms' df
+    * (broadcast) and the corpus stats (one row, broadcast) — the one
+    * read every single-generation probe scores from. */
+  private def joinedIndexed(s: SparkSession, dir: String, part: String,
+      schema: StructType, terms: Seq[String]): DataFrame = {
+    val root = textIndex(s, dir)
+    val dfT = termRows(s, Seq(root), "df", DfSchema, terms).select(col("term"), col("df"))
+    termRows(s, Seq(root), part, schema, terms)
+      .join(broadcast(dfT), "term")
+      .crossJoin(broadcast(s.read.schema(StatsSchema).parquet(s"$root/stats")))
   }
 
   /** Façade form: arbitrary-term top-k from the persisted index. */
@@ -192,20 +213,10 @@ object TextIndex {
     * gates. Probe IO ≤ HeadB·|terms| head rows + vocab-sized df at
     * ANY corpus size — the text analogue of the bounded ANN probe. */
   private[graft] def bm25ScoredHead(s: SparkSession, dir: String,
-      terms: Seq[String]): DataFrame = {
-    val root = textIndex(s, dir)
-    val buckets = terms.map(bucketOf).distinct
-    val head = s.read.schema(HeadSchema).parquet(s"$root/head")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
-    head.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
+      terms: Seq[String]): DataFrame =
+    joinedIndexed(s, dir, "head", HeadSchema, terms)
       .select(col("doc_id"), col("term").as("token"),
         expr(TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")).as("sc"))
-  }
 
   /** Budget-bounded top-k from the head tier. A query whose terms all
     * have df ≤ [[HeadB]] gets the EXACT answer (spec-pinned — the
@@ -263,7 +274,6 @@ object TextIndex {
   private def tBm25HeadRecall: Q = (s, dir) => {
     val root = textIndex(s, dir)
     val allTerms = Bm25BatchQueries.flatMap(_._2).distinct
-    val buckets = allTerms.map(bucketOf).distinct
     val probes = {
       val rows = Bm25BatchQueries.flatMap { case (id, ts) =>
         ts.map(t => org.apache.spark.sql.Row(id, t)) }
@@ -272,26 +282,25 @@ object TextIndex {
           org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("term", org.apache.spark.sql.types.StringType))))
     }
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(allTerms: _*))
+    val dfT = termRows(s, Seq(root), "df", DfSchema, allTerms)
       .select(col("term"), col("df"))
     val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
     val sc = TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("nanos").desc, col("doc_id").asc)
-    def topOf(tier: DataFrame): DataFrame = tier
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(allTerms: _*))
-      .join(broadcast(probes), "term")
-      .join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("doc_id"), expr(sc).as("sc"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(floor(col("sc") * lit(1e9) + lit(0.5)).cast("long")).as("nanos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= HeadRecallK)
-      .select(col("query_id"), col("doc_id"))
-    val exact = topOf(s.read.schema(PostingsSchema).parquet(s"$root/postings"))
-    val head = topOf(s.read.schema(HeadSchema).parquet(s"$root/head"))
+    def topOf(part: String, schema: StructType) =
+      termRows(s, Seq(root), part, schema, allTerms)
+        .join(broadcast(probes), "term")
+        .join(broadcast(dfT), "term")
+        .crossJoin(broadcast(stats))
+        .select(col("query_id"), col("doc_id"), expr(sc).as("sc"))
+        .groupBy(col("query_id"), col("doc_id"))
+        .agg(sum(floor(col("sc") * lit(1e9) + lit(0.5)).cast("long")).as("nanos"))
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= HeadRecallK)
+        .select(col("query_id"), col("doc_id"))
+    val exact = topOf("postings", PostingsSchema)
+    val head = topOf("head", HeadSchema)
     exact.join(head.withColumn("hit", lit(1L)), Seq("query_id", "doc_id"), "left")
       .groupBy(col("query_id"))
       .agg(coalesce(sum(col("hit")), lit(0L)).as("n_hits"))
@@ -354,24 +363,19 @@ object TextIndex {
     * integer algebra, so `t_bm25f_indexed` shares `t_bm25f`'s oracle
     * verbatim). */
   private[graft] def bm25fScoredIndexed(s: SparkSession, dir: String,
-      terms: Seq[String]): DataFrame = {
-    val root = textIndex(s, dir)
-    val buckets = terms.map(bucketOf).distinct
-    val post = s.read.schema(PostingsSchema).parquet(s"$root/postings")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
-    post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
+      terms: Seq[String]): DataFrame =
+    bm25fScored(joinedIndexed(s, dir, "postings", PostingsSchema, terms))
+
+  /** BM25F partials `(doc_id, token, sc)` over postings joined to df
+    * and stats — body components are total − title. */
+  private def bm25fScored(joined: DataFrame): DataFrame =
+    joined
       .withColumn("tf_b", col("tf") - col("tf_t"))
       .withColumn("dl_b", col("dl") - col("dl_t"))
       .withColumn("s_b", col("s_dl") - col("s_dlt"))
       .select(col("doc_id"), col("term").as("token"),
         expr(TextAnalysis.bm25fSc("tf_t", "tf_b", "dl_t", "dl_b",
           "df", "n_docs", "s_dlt", "s_b")).as("sc"))
-  }
 
   /** Façade form: arbitrary-term fielded top-k from the persisted
     * index. */
@@ -394,14 +398,14 @@ object TextIndex {
     if (rest.isEmpty) "p0 IS NOT NULL" else s"exists(p0, x -> ${rest.mkString(" AND ")})"
   }
 
-  /** Two-stage phrase top-k over a scored-with-positions frame
-    * `(doc_id, term, sc, pos)` restricted to the phrase's terms:
-    * candidates must match EVERY distinct term (the index
-    * intersection), only candidates pay the position-adjacency
-    * confirm, scoring keeps the filter-query convention (global idf;
+  /** Two-stage phrase top-k over postings (with positions) joined to
+    * df and stats, restricted to the phrase's terms: candidates must
+    * match EVERY distinct term (the index intersection), only
+    * candidates pay the position-adjacency confirm, scoring keeps the
+    * filter-query convention (global idf; exact-integer BM25;
     * nano-integer order-free partials) — the exact
     * [[TextAnalysis.phraseBm25Of]] contract, corpus never touched. */
-  private def phraseTopkOf(scored: DataFrame, phrase: Seq[String],
+  private def phraseTopkOf(joined: DataFrame, phrase: Seq[String],
       k: Int): DataFrame = {
     val aggs = Seq(
       countDistinct(col("term")).as("nt"),
@@ -409,7 +413,11 @@ object TextIndex {
       phrase.indices.map(i =>
         first(when(col("term") === phrase(i), col("pos")), ignoreNulls = true)
           .as(s"p$i"))
-    scored.groupBy(col("doc_id"))
+    joined
+      .select(col("doc_id"), col("term"),
+        expr(TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")).as("sc"),
+        col("pos"))
+      .groupBy(col("doc_id"))
       .agg(aggs.head, aggs.tail: _*)
       .filter(col("nt") === phrase.distinct.length)
       .filter(expr(phraseAdjacencyExpr(phrase)))
@@ -417,26 +425,6 @@ object TextIndex {
       .limit(k)
       .select(col("doc_id"),
         expr(TextAnalysis.r6("cast(nanos as double) / 1e9")).as("bm25"))
-  }
-
-  /** `(doc_id, term, sc, pos)` from the cached single-generation
-    * index — [[bm25ScoredIndexed]] with the positional column carried
-    * (exact-integer scoring, the phrase contract). */
-  private def indexedScoredWithPos(s: SparkSession, dir: String,
-      terms: Seq[String]): DataFrame = {
-    val root = textIndex(s, dir)
-    val buckets = terms.map(bucketOf).distinct
-    val post = s.read.schema(PostingsSchema).parquet(s"$root/postings")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
-    post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("term"),
-        expr(TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")).as("sc"),
-        col("pos"))
   }
 
   /** Phrase-constrained BM25 top-k SERVED FROM THE INDEX — the
@@ -451,7 +439,7 @@ object TextIndex {
       k: Int): DataFrame = {
     require(phrase.nonEmpty && phrase.forall(_.nonEmpty),
       "phrase must be non-empty tokens")
-    phraseTopkOf(indexedScoredWithPos(s, dir, phrase), phrase, k)
+    phraseTopkOf(joinedIndexed(s, dir, "postings", PostingsSchema, phrase), phrase, k)
   }
 
   /** Phrase retrieval from an explicit-root incremental index — the
@@ -467,34 +455,7 @@ object TextIndex {
     require(phrase.nonEmpty && phrase.forall(_.nonEmpty),
       "phrase must be non-empty tokens")
     org.apache.spark.sql.graft.GraftFunctions.register(s)
-    val gens = asOf match {
-      case None => readManifest(s, root)
-      case Some(v) => manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-"))
-    }
-    require(gens.nonEmpty, s"no text index at $root — build() first")
-    val buckets = phrase.map(bucketOf).distinct
-    def pruned(sub: String, schema: org.apache.spark.sql.types.StructType) =
-      gens.map(g =>
-        s.read.schema(schema).parquet(s"$root/$g/$sub")
-          .filter(col("bucket").isin(buckets: _*) && col("term").isin(phrase.distinct: _*))
-          .withColumn("gen", lit(g.stripPrefix("gen-").toLong)))
-      .reduce(_ unionByName _)
-    val post = pruned("postings", PostingsSchema)
-      .groupBy(col("doc_id"), col("term"))
-      .agg(sum(col("tf")).as("tf"), sum(col("dl")).as("dl"),
-        max_by(col("pos"), when(col("tf") > 0, col("gen")).otherwise(lit(-1L)))
-          .as("pos"))
-      .filter(col("tf") > 0)
-    val dfT = pruned("df", DfSchema).groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = gens.map(g => s.read.schema(StatsSchema).parquet(s"$root/$g/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"))
-    val scored = post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("term"),
-        expr(TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")).as("sc"),
-        col("pos"))
-    phraseTopkOf(scored, phrase, k)
+    phraseTopkOf(nettedAt(s, root, gensAt(s, root, asOf), phrase.distinct), phrase, k)
   }
 
   // ----------------------------------------------------------------
@@ -639,8 +600,9 @@ object TextIndex {
   // Explicit read schemas: an empty generation (e.g. an empty upsert
   // batch, or a bucket no query term hashes to) writes no part files,
   // and schema INFERENCE over a file-less dir throws — pinned schemas
-  // make every generation readable regardless of its row count, and
-  // skip the inference listing besides.
+  // make every generation readable regardless of its row count, skip
+  // the footer-inference job besides, and type the empty frame a
+  // probe gets when no generation holds any of its buckets.
   // The fielded (title/body) split rides the SAME postings: tf_t/dl_t
   // are the title-field components (body = total − title, so only one
   // extra pair is stored), additive under the signed-delta algebra
@@ -1289,39 +1251,50 @@ object TextIndex {
   def pins(s: SparkSession, root: String): Map[String, Long] =
     Pins.pins(s, root)
 
-  /** BM25 partials over every published generation: postings union
-    * bucket-pruned per gen and NETTED per (doc, term) (signed deltas —
-    * net tf ≤ 0 rows are superseded/deleted and drop), per-gen df
-    * deltas SUMMED per term, stats summed — all exact integer merges,
-    * so scores equal a from-scratch index of the surviving corpus bit
-    * for bit. */
-  private def scoredAtRoot(s: SparkSession, root: String,
-      terms: Seq[String], asOf: Option[Long] = None): DataFrame = {
+  /** The generation dirs a probe reads: the live manifest's, or those
+    * of retained snapshot `asOf`. */
+  private def gensAt(s: SparkSession, root: String, asOf: Option[Long]): Seq[String] = {
     val gens = asOf match {
       case None => readManifest(s, root)
       case Some(v) => manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-"))
     }
     require(gens.nonEmpty, s"no text index at $root — build() first")
-    val buckets = terms.map(bucketOf).distinct
-    def pruned(sub: String, schema: org.apache.spark.sql.types.StructType) =
-      gens.map(g =>
-        s.read.schema(schema).parquet(s"$root/$g/$sub")
-          .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*)))
-      .reduce(_ unionByName _)
-    val post = pruned("postings", PostingsSchema)
-      .groupBy(col("doc_id"), col("term"))
-      .agg(sum(col("tf")).as("tf"), sum(col("dl")).as("dl"))
-      .filter(col("tf") > 0)
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-    val dfT = pruned("df", DfSchema).groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = gens.map(g => s.read.schema(StatsSchema).parquet(s"$root/$g/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"))
-    post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("term").as("token"),
-        expr(TextAnalysis.bm25ScDouble("tf", "df", "dl", "n_docs", "s_dl")).as("sc"))
+    gens
   }
+
+  /** The query terms' postings over `gens`, NETTED per (doc, term)
+    * (signed deltas — net tf ≤ 0 rows are superseded/deleted and
+    * drop), joined to the per-term df deltas SUMMED and the stats
+    * summed — all exact integer merges, so scores equal a from-scratch
+    * index of the surviving corpus bit for bit. Positions are not
+    * additive: the live ones are the latest POSITIVE row's (a doc
+    * version lives whole in one generation; anti rows carry NULL),
+    * picked by `max_by` over the generation number. Every additive
+    * column is netted; the optimizer prunes the aggregates (and the
+    * scanned columns) a probe's scoring never reads. */
+  private def nettedAt(s: SparkSession, root: String, gens: Seq[String],
+      terms: Seq[String]): DataFrame = {
+    val post = gens
+      .map(g => termRows(s, Seq(s"$root/$g"), "postings", PostingsSchema, terms)
+        .withColumn("gen", lit(g.stripPrefix("gen-").toLong)))
+      .reduce(_ unionByName _)
+      .groupBy(col("doc_id"), col("term"))
+      .agg(sum(col("tf")).as("tf"), sum(col("tf_t")).as("tf_t"),
+        sum(col("dl")).as("dl"), sum(col("dl_t")).as("dl_t"),
+        max_by(col("pos"), when(col("tf") > 0, col("gen")).otherwise(lit(-1L)))
+          .as("pos"))
+      .filter(col("tf") > 0)
+    val dfT = termRows(s, gens.map(g => s"$root/$g"), "df", DfSchema, terms)
+      .groupBy(col("term")).agg(sum(col("df")).as("df"))
+    post.join(broadcast(dfT), "term").crossJoin(broadcast(statsAt(s, root, gens)))
+  }
+
+  /** Corpus stats `(n_docs, s_dl, s_dlt)` summed over `gens`. */
+  private def statsAt(s: SparkSession, root: String, gens: Seq[String]): DataFrame =
+    gens.map(g => s.read.schema(StatsSchema).parquet(s"$root/$g/stats"))
+      .reduce(_ unionByName _)
+      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"),
+        sum(col("s_dlt")).as("s_dlt"))
 
   /** Arbitrary-term top-k from an explicit-root incremental index.
     * `asOf = Some(v)` probes the RETAINED SNAPSHOT v instead of the
@@ -1332,7 +1305,11 @@ object TextIndex {
     * a replayable answer. */
   def bm25TopkAtRoot(s: SparkSession, root: String, terms: Seq[String],
       k: Int, asOf: Option[Long] = None): DataFrame =
-    TextAnalysis.bm25TopkCut(scoredAtRoot(s, root, terms, asOf), k)
+    TextAnalysis.bm25TopkCut(
+      nettedAt(s, root, gensAt(s, root, asOf), terms)
+        .select(col("doc_id"), col("term").as("token"),
+          expr(TextAnalysis.bm25ScDouble("tf", "df", "dl", "n_docs", "s_dl")).as("sc")),
+      k)
 
   /** Fielded (BM25F) top-k from an explicit-root incremental index —
     * the [[bm25TopkAtRoot]] twin: the title components net across
@@ -1341,38 +1318,9 @@ object TextIndex {
     * inherits the whole LSM lifecycle — upserts, deletes, compaction,
     * `asOf` snapshot pins — with zero extra structures. */
   def bm25fTopkAtRoot(s: SparkSession, root: String, terms: Seq[String],
-      k: Int, asOf: Option[Long] = None): DataFrame = {
-    val gens = asOf match {
-      case None => readManifest(s, root)
-      case Some(v) => manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-"))
-    }
-    require(gens.nonEmpty, s"no text index at $root — build() first")
-    val buckets = terms.map(bucketOf).distinct
-    def pruned(sub: String, schema: org.apache.spark.sql.types.StructType) =
-      gens.map(g =>
-        s.read.schema(schema).parquet(s"$root/$g/$sub")
-          .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*)))
-      .reduce(_ unionByName _)
-    val post = pruned("postings", PostingsSchema)
-      .groupBy(col("doc_id"), col("term"))
-      .agg(sum(col("tf")).as("tf"), sum(col("tf_t")).as("tf_t"),
-        sum(col("dl")).as("dl"), sum(col("dl_t")).as("dl_t"))
-      .filter(col("tf") > 0)
-    val dfT = pruned("df", DfSchema).groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = gens.map(g => s.read.schema(StatsSchema).parquet(s"$root/$g/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"),
-        sum(col("s_dlt")).as("s_dlt"))
-    val scored = post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("tf_b", col("tf") - col("tf_t"))
-      .withColumn("dl_b", col("dl") - col("dl_t"))
-      .withColumn("s_b", col("s_dl") - col("s_dlt"))
-      .select(col("doc_id"), col("term").as("token"),
-        expr(TextAnalysis.bm25fSc("tf_t", "tf_b", "dl_t", "dl_b",
-          "df", "n_docs", "s_dlt", "s_b")).as("sc"))
-    TextAnalysis.bm25TopkCut(scored, k)
-  }
+      k: Int, asOf: Option[Long] = None): DataFrame =
+    TextAnalysis.bm25TopkCut(
+      bm25fScored(nettedAt(s, root, gensAt(s, root, asOf), terms)), k)
 
   /** BATCH retrieval from an explicit-root incremental index — the
     * [[bm25TopkBatchIndexed]] serving shape over SIGNED delta
@@ -1394,11 +1342,7 @@ object TextIndex {
   def bm25TopkBatchAtRoot(s: SparkSession, root: String, queries: DataFrame,
       k: Int, asOf: Option[Long] = None): DataFrame = {
     org.apache.spark.sql.graft.GraftFunctions.register(s)
-    val gens = asOf match {
-      case None => readManifest(s, root)
-      case Some(v) => manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-"))
-    }
-    require(gens.nonEmpty, s"no text index at $root — build() first")
+    val gens = gensAt(s, root, asOf)
     val probes = queries
       .select(col("query_id").cast("long").as("query_id"), col("term"))
       .filter(col("term") =!= "")
@@ -1412,27 +1356,22 @@ object TextIndex {
     // filter rows after
     val buckets = probes.select(col("bucket")).distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
-    val post = gens.map(g => s.read.schema(PostingsSchema).parquet(s"$root/$g/postings")
-        .filter(col("bucket").isin(buckets: _*)))
-      .reduce(_ unionByName _)
+    def pruned(part: String, schema: StructType) =
+      PrunedRead(s, gens.map(g => s"$root/$g/$part"), "bucket", buckets, Some(schema))
+    val post = pruned("postings", PostingsSchema)
       .join(terms, Seq("bucket", "term"))
       .groupBy(col("doc_id"), col("term"), col("bucket"))
       .agg(sum(col("tf")).as("tf"), sum(col("dl")).as("dl"))
       .filter(col("tf") > 0)
-    val dfT = gens.map(g => s.read.schema(DfSchema).parquet(s"$root/$g/df")
-        .filter(col("bucket").isin(buckets: _*)))
-      .reduce(_ unionByName _)
+    val dfT = pruned("df", DfSchema)
       .join(terms, Seq("bucket", "term"))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = gens.map(g => s.read.schema(StatsSchema).parquet(s"$root/$g/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"))
     val sc = TextAnalysis.bm25ScDouble("tf", "df", "dl", "n_docs", "s_dl")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("nanos").desc, col("doc_id").asc)
     post.join(broadcast(probes), Seq("bucket", "term"))
       .join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
+      .crossJoin(broadcast(statsAt(s, root, gens)))
       .select(col("query_id"), col("doc_id"), expr(sc).as("sc"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(floor(col("sc") * lit(1e9) + lit(0.5)).cast("long")).as("nanos"))

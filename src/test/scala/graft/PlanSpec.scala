@@ -662,4 +662,71 @@ class PlanSpec extends SparkSpec {
     assert(bad.isEmpty, s"unbounded collects outside exemptions: ${bad.mkString(", ")}")
   }
 
+  test("index probes build their plans without Spark jobs: text 0, ann the probe-cell collect plus one schema read per data generation") {
+    import spark.implicits._
+    // 600 distinct words: every generation's bucket dirs cover the 64
+    val docs = (0L until 300L).map(i => i ->
+        ("vector hash " + (0 until 20).map(j => s"w${(i * 7 + j) % 600}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val textRoot = java.nio.file.Files.createTempDirectory("graft-plan-jobs-text").toString
+    operators.TextIndex.build(docs.filter(col("doc_id") % 3 === 0), textRoot)
+    operators.TextIndex.upsert(docs.filter(col("doc_id") % 3 === 1), textRoot)
+    operators.TextIndex.upsert(docs.filter(col("doc_id") % 3 === 2), textRoot)
+    // every generation holds more than 32 bucket dirs, the size at which
+    // a whole-dir read lists its partitions with a distributed job
+    for (g <- 0 to 2; part <- Seq("postings", "df"))
+      assert(new java.io.File(s"$textRoot/gen-$g/$part").list()
+        .count(_.startsWith("bucket=")) > 32, s"gen-$g/$part")
+    val v = Tables.embeddings(spark, sf)
+    val annRoot = java.nio.file.Files.createTempDirectory("graft-plan-jobs-ann").toString
+    Graft.ann.build(v.filter(col("vec_id") <= 200), "vec_id", "embedding", "label", annRoot)
+    Graft.ann.upsert(v.filter(col("vec_id") > 200 && col("vec_id") <= 320),
+      "vec_id", "embedding", "label", annRoot)
+    Graft.ann.upsert(v.filter(col("vec_id") > 320), "vec_id", "embedding", "label", annRoot)
+    val dataGens = 3
+    val q = v.filter(col("vec_id") === 5L).select("embedding")
+      .collect()(0).getSeq[Float](0).toArray
+
+    // jobs started from this thread while `build` constructs a
+    // DataFrame (nothing collects it), counted through the listener bus
+    // as (SQL executions — a collect, whose AQE stages are jobs of
+    // their own — and jobs outside any: listing and schema inference)
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+      .invoke(spark.sparkContext)
+    val drain = bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0).get
+    def jobsWhile(build: => org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val group = s"plan-jobs-${System.nanoTime()}"
+      val execs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+            execs.add(Option(j.properties.getProperty("spark.sql.execution.id"))); ()
+          }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setJobGroup(group, "plan-build job count")
+      try { build; drain.invoke(bus) }
+      finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      import scala.jdk.CollectionConverters._
+      val all = execs.asScala.toSeq
+      (all.flatten.distinct.size, all.count(_.isEmpty))
+    }
+    assert(jobsWhile(Graft.text.bm25TopkAt(spark, textRoot, Seq("vector", "hash"), 10)) == (0, 0))
+    assert(jobsWhile(Graft.text.bm25fTopkAt(spark, textRoot, Seq("vector", "hash"), 10)) == (0, 0))
+    assert(jobsWhile(Graft.text.phraseBm25At(spark, textRoot,
+      operators.TextAnalysis.Bm25Phrase, 10)) == (0, 0))
+    // the probe-cell collect, plus at most one footer read per data
+    // generation (`data-N` payload types are the caller's)
+    for ((name, probe) <- Seq(
+        "probe" -> (() => Graft.ann.probe(spark, annRoot, q, k = 10)),
+        "probeAdc" -> (() => Graft.ann.probeAdc(spark, annRoot, q, k = 10)))) {
+      val (collects, planJobs) = jobsWhile(probe())
+      assert(collects == 1 && planJobs <= dataGens, s"$name: $collects collects, $planJobs jobs")
+    }
+  }
+
 }

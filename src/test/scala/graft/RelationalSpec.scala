@@ -27,6 +27,22 @@ class RelationalSpec extends SparkSpec {
     assert(rows == Seq(Row(null, "a", 1), Row(9.5, null, 2)))
   }
 
+  test("a14_winsorize_approx: a one-row group's percentile envelope is its value, not NULL") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-winsor").toString
+    (("A", 7.5) +: (1 to 1000).map(i => ("N", i.toDouble)))
+      .toDF("l_returnflag", "l_extendedprice")
+      .write.parquet(s"$dir/lineitem.parquet")
+    val out = operators.RelationalExt.queries("a14_winsorize_approx")(spark, dir)
+      .collect().map(r => r.getAs[String]("flag") -> r).toMap
+    val one = out("A")
+    assert(one.getAs[Long]("n") == 1L)
+    assert(one.getAs[Double]("lo") == 7.5 && one.getAs[Double]("hi") == 7.5)
+    for (r <- Seq(one, out("N")); c <- Seq("lo_within_bounds", "hi_within_bounds",
+        "wmean_within_bounds"))
+      assert(r.getAs[Any](c) == true, s"${r.getAs[String]("flag")} $c: $r")
+  }
+
   test("u1 schema union pads missing columns with null") {
     val df = Relational.queries("u1_schema_union")(spark, sf)
     assert(df.columns.toSeq == df.columns.toSeq.sorted)

@@ -549,6 +549,30 @@ class SimilaritySpec extends SparkSpec {
       hits.mkString(","))
   }
 
+  test("ann index: an empty upsert publishes nothing; later probes return the rows they did before it") {
+    val v = Tables.embeddings(spark, sf)
+    val root = java.nio.file.Files.createTempDirectory("graft-ann-empty").toString
+    Graft.ann.build(v.filter(col("vec_id") <= 200), "vec_id", "embedding", "label", root)
+    Graft.ann.upsert(v.filter(col("vec_id") > 200 && col("vec_id") <= 260),
+      "vec_id", "embedding", "label", root)
+    val q = v.filter(col("vec_id") === 5L).select("embedding")
+      .collect()(0).getSeq[Float](0).toArray
+    def served() = (Graft.ann.probe(spark, root, q, k = 10).collect().toSeq,
+      Graft.ann.probeAdc(spark, root, q, k = 10).collect().toSeq)
+    val before = served()
+    val versions = Graft.ann.snapshots(spark, root)
+    val acc = Graft.ann.upsert(v.limit(0), "vec_id", "embedding", "label", root)
+    assert(acc.collect().isEmpty)
+    assert(acc.columns.toSeq == Seq("cell", "n_before", "n_added", "n_after"))
+    assert(Graft.ann.snapshots(spark, root) == versions, "an empty upsert published a generation")
+    assert(served() == before)
+    // the next non-empty upsert lands as the next generation
+    Graft.ann.upsert(v.filter(col("vec_id") > 260 && col("vec_id") <= 300),
+      "vec_id", "embedding", "label", root)
+    assert(Graft.ann.snapshots(spark, root).max == versions.max + 1)
+    assert(Graft.ann.probe(spark, root, q, k = 10).collect().nonEmpty)
+  }
+
   test("ann index upsert: probe(base+upserts) == probe(full rebuild); accounting adds up") {
     val v = Tables.embeddings(spark, sf)
     val maxId = v.agg(max("vec_id")).collect()(0).getLong(0)

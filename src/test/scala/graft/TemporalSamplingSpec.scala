@@ -6,6 +6,23 @@ import graft.operators.{Sampling, Similarity, Temporal, TextAnalysis}
 
 class TemporalSamplingSpec extends SparkSpec {
 
+  private def bucketOf(term: String): Int =
+    (operators.TextIndex.polyHashJvm(term) % operators.TextIndex.Buckets).toInt
+
+  /** `n` words whose buckets none of `avoid` hashes to — the text of a
+    * generation that holds none of a query's bucket partitions. */
+  private def wordsOutside(avoid: Seq[String], n: Int): Seq[String] = {
+    val taken = avoid.map(bucketOf).toSet
+    Iterator.from(0).map(i => s"filler$i").filterNot(w => taken(bucketOf(w))).take(n).toSeq
+  }
+
+  /** A term whose bucket no word of `docs` (every version ever written)
+    * hashes to: its probe reads no partition of any generation. */
+  private def absentTerm(docs: Seq[(Long, String)]): String = {
+    val present = docs.flatMap(_._2.split(" ")).map(bucketOf).toSet
+    Iterator.from(0).map(i => s"absent$i").find(w => !present(bucketOf(w))).get
+  }
+
   test("j6 as-of join: every event gets exactly one rate, and it is the day-floor rate") {
     val out = Temporal.queries("j6_asof_join")(spark, sf)
     val events = Tables.events(spark, sf)
@@ -141,8 +158,19 @@ class TemporalSamplingSpec extends SparkSpec {
     operators.TextIndex.delete(Seq(3L).toDF("doc_id"), root)
     val afterDelete = afterUpsert.filterNot(_._1 == 3L)
     assert(servedAt() == inQueryOf(afterDelete))
+    // a fourth generation holding none of the query terms' buckets: the
+    // probe skips its postings yet still counts its docs in the stats
+    val sparse = Seq((6L, wordsOutside(terms, 12).mkString(" ")))
+    operators.TextIndex.upsert(sparse.toDF("doc_id", "text"), root)
+    val afterSparse = afterDelete ++ sparse
+    assert(servedAt() == inQueryOf(afterSparse))
+    // terms hashing only to absent buckets: empty, with the probe schema
+    val absent = Graft.text.bm25fTopkAt(spark, root,
+      Seq(absentTerm(v1 ++ v2New ++ v2Resend ++ sparse)), 10)
+    assert(absent.collect().isEmpty)
+    assert(absent.schema == Graft.text.bm25fTopkAt(spark, root, terms, 10).schema)
     operators.TextIndex.compact(spark, root)
-    assert(servedAt() == inQueryOf(afterDelete))
+    assert(servedAt() == inQueryOf(afterSparse))
     // the snapshot pin replays the PRE-upsert fielded state
     assert(servedAt(asOf = Some(pin1)) == inQueryOf(v1))
   }
@@ -184,8 +212,16 @@ class TemporalSamplingSpec extends SparkSpec {
     operators.TextIndex.delete(Seq(4L).toDF("doc_id"), root)
     val afterDel = after.filterNot(_._1 == 4L)
     assert(servedAt() == inQueryOf(afterDel))
+    // a fourth generation holding none of the phrase's buckets
+    val sparse = Seq((7L, wordsOutside(phrase, 6).mkString(" ")))
+    operators.TextIndex.upsert(sparse.toDF("doc_id", "text"), root)
+    val afterSparse = afterDel ++ sparse
+    assert(servedAt() == inQueryOf(afterSparse))
+    val absent = Graft.text.phraseBm25At(spark, root, Seq(absentTerm(v1 ++ v2 ++ sparse)), 10)
+    assert(absent.collect().isEmpty)
+    assert(absent.schema == Graft.text.phraseBm25At(spark, root, phrase, 10).schema)
     operators.TextIndex.compact(spark, root)
-    assert(servedAt() == inQueryOf(afterDel))
+    assert(servedAt() == inQueryOf(afterSparse))
     // the pin replays the ORIGINAL positions (doc 1 adjacent, doc 2 not)
     assert(servedAt(asOf = Some(pin1)) == inQueryOf(v1))
   }
@@ -220,6 +256,16 @@ class TemporalSamplingSpec extends SparkSpec {
     val again = Graft.text.bm25TopkAt(spark, root, Seq("vector", "hash"), 15)
       .collect().toSeq
     assert(again == inQuery)
+    // a non-empty generation holding none of the query terms' buckets
+    // is skipped by the probe's read, yet its docs count in the stats
+    import spark.implicits._
+    val sparse = Seq((1000000L, wordsOutside(Seq("vector", "hash"), 8).mkString(" ")))
+      .toDF("doc_id", "text")
+    operators.TextIndex.upsert(sparse, root)
+    val withSparse = docs.select(col("doc_id"), col("text")).unionByName(sparse)
+    assert(Graft.text.bm25TopkAt(spark, root, Seq("vector", "hash"), 15).collect().toSeq ==
+      operators.TextAnalysis.bm25TopkOf(withSparse, Seq("vector", "hash"), 15)
+        .collect().toSeq)
   }
 
   test("bm25 batch probe: each query's slice equals its single-query indexed probe exactly") {
